@@ -12,13 +12,19 @@ Scale note: views are lazy — registration reads footers only. Filters and
 projections expressed on these views push down to the parquet scan (Catalyst
 ``PushedFilters`` / ``ReadSchema``), which is what makes a 100 TB scan of a
 3-column projection read 3 columns, not 40.
+
+Results built from these tables and read repeatedly (materialized frames,
+indexes, landings) are served by ``memo``, which rebuilds them whenever
+the parquet files they were built from change.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -81,52 +87,32 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-#: Registry of every served-index/frame memo in the package, with an
-#: optional per-value cleanup. All registered memos share one key
-#: contract — key[0] is the owning applicationId — so entries belonging
-#: to dead applications can be evicted centrally: a long-lived Python
-#: process running several Spark sessions otherwise accumulates dead
-#: DataFrames, checkpoint RDD references, and tempdirs forever.
-_MEMO_REGISTRY: list[tuple[dict, object]] = []
+def _source_fingerprint(sf_dir: str) -> tuple:
+    """Sorted ``(file, size, mtime_ns)`` of every parquet table under
+    ``sf_dir``, single-file and directory tables alike; ``()`` when the
+    dir does not exist (a hand-frame test's placeholder dir)."""
+    try:
+        tables = [e for e in os.scandir(sf_dir) if e.name.endswith(".parquet")]
+    except OSError:
+        return ()
+    files = []
+    for e in tables:
+        if e.is_dir():
+            files += [os.path.join(r, f) for r, _, fs in os.walk(e.path) for f in fs]
+        else:
+            files.append(e.path)
+    return tuple(
+        sorted((p, (st := os.stat(p)).st_size, st.st_mtime_ns) for p in files)
+    )
 
 
-def register_memo(memo: dict, cleanup=None) -> dict:
-    """Enroll a memo dict (key[0] MUST be the applicationId) for stale-
-    application eviction; ``cleanup(value)`` runs on evicted values (e.g.
-    tempdir removal). Returns the dict for inline use."""
-    _MEMO_REGISTRY.append((memo, cleanup))
-    return memo
+#: The served-result memo: (applicationId, name, sf_dir) →
+#: (source fingerprint, value, cleanup).
+_MEMO: dict[tuple, tuple] = {}
 
-
-def evict_stale_memos(spark: SparkSession) -> None:
-    """Drop every registered memo entry owned by an applicationId other
-    than the active session's. Called from each memo accessor, so the
-    process holds at most one application's worth of served state. Cheap
-    when nothing is stale (one dict scan per memo)."""
-    app = spark.sparkContext.applicationId
-    for memo, cleanup in _MEMO_REGISTRY:
-        for k in [k for k in memo if k[0] != app]:
-            v = memo.pop(k)
-            if cleanup is not None:
-                try:
-                    cleanup(v)
-                except Exception:  # cleanup is best-effort by design
-                    pass
-
-
-#: Append-only log of cold memo builds: {"memo", "seconds"} per build.
-#: The scaling harness drains this around each timed run so every rung
-#: self-attributes — "slow because the shared pair frame was cold HERE"
-#: is recorded instead of adjudicated after the fact (the SCALING_r08
-#: lesson: un-attributed super-linear rungs on composition entries).
+#: Append-only log of memo builds, {"memo", "seconds"} per build; the
+#: bench and scaling harnesses drain it around each timed run.
 MEMO_BUILD_LOG: list[dict] = []
-
-
-def log_memo_build(name: str, seconds: float) -> None:
-    """Record one cold memo build. Called by ``memo_frame`` and by the
-    ad-hoc served-index memos (LSH pairs, IVF assignment, BPE/perceptron
-    fits, …) at their build sites."""
-    MEMO_BUILD_LOG.append({"memo": name, "seconds": round(seconds, 3)})
 
 
 def drain_memo_build_log() -> list[dict]:
@@ -136,47 +122,65 @@ def drain_memo_build_log() -> list[dict]:
     return out
 
 
-def timed_build(name: str, build):
-    """Run ``build()``, logging its wall time as a cold memo build —
-    the one-liner the ad-hoc memo sites wrap their build call in."""
-    t0 = time.perf_counter()
-    out = build()
-    log_memo_build(name, time.perf_counter() - t0)
-    return out
+def _evict(key: tuple) -> None:
+    """Drop one entry: unpersist its DataFrames (a persisted frame left in
+    Spark's cache is substituted into any later plan over the same path,
+    rewritten files or not), then run its cleanup."""
+    _fp, value, cleanup = _MEMO.pop(key)
+    for v in value if isinstance(value, tuple) else (value,):
+        if isinstance(v, DataFrame):
+            try:
+                v.unpersist(blocking=True)
+            except Py4JError:  # its application is stopped: nothing cached
+                pass
+    if cleanup is not None:
+        cleanup(value)
 
 
-#: Served-frame memo: (applicationId, *key) → materialized DataFrame.
-#: The SAME contract as the similarity/dedup index memos — a frame an
-#: operator family reads repeatedly is materialized ONCE per session per
-#: sf_dir instead of re-persisted (and leaked) on every invocation.
-_FRAME_MEMO: dict[tuple, DataFrame] = register_memo({})
+def memo(spark: SparkSession, name: str, sf_dir: str, build, cleanup=None):
+    """Serve ``build()`` once per (application, name, sf_dir) for as long
+    as the parquet files under ``sf_dir`` are unchanged.
 
+    Each call compares ``_source_fingerprint(sf_dir)`` with the one stored
+    at build time and rebuilds on a mismatch; entries of other (dead)
+    applications are evicted on every call. Every build is logged under
+    ``name``. ``cleanup(value)`` runs when the entry is evicted (e.g.
+    removing its tempdir).
 
-def memo_frame(spark: SparkSession, key: tuple, build) -> DataFrame:
-    """Materialize ``build()`` once per (application, key) and serve the
-    lineage-free checkpoint to every caller.
-
-    ``localCheckpoint`` (eager) both executes the plan and frees callers
-    from the source lineage — repeated operator invocations (bench
-    passes, verify sweeps, determinism tests) reuse one stored copy
-    instead of stacking identical persisted RDDs for the session's
-    lifetime. At 100 TB the analog is the materialized index/staging
-    table on the lake.
-
-    CONTRACT: the key must uniquely identify the data the builder reads
-    within this application — the memo cannot see through a changed
-    ``load_table`` or rewritten parquet behind an old key. In tests that
-    monkeypatch ``load_table`` with hand frames, use a UNIQUE placeholder
-    sf_dir per hand frame (not a shared "x"), or the first test's frame
-    is served to the second.
+    Tests that monkeypatch ``load_table`` with hand frames must pass a
+    UNIQUE placeholder sf_dir per hand frame: a placeholder has no files,
+    so its fingerprint never changes and the first frame would be served
+    to the second test.
     """
-    evict_stale_memos(spark)
-    k = (spark.sparkContext.applicationId, *key)
-    df = _FRAME_MEMO.get(k)
-    if df is None:
-        df = timed_build(str(key[0]), lambda: build().localCheckpoint())
-        _FRAME_MEMO[k] = df
-    return df
+    app = spark.sparkContext.applicationId
+    for k in [k for k in _MEMO if k[0] != app]:
+        _evict(k)
+    key = (app, name, sf_dir)
+    fp = _source_fingerprint(sf_dir)
+    hit = _MEMO.get(key)
+    if hit is not None:
+        if hit[0] == fp:
+            return hit[1]
+        _evict(key)
+    t0 = time.perf_counter()
+    value = build()
+    MEMO_BUILD_LOG.append(
+        {"memo": name, "seconds": round(time.perf_counter() - t0, 3)}
+    )
+    _MEMO[key] = (fp, value, cleanup)
+    return value
+
+
+def memo_frame(spark: SparkSession, name: str, sf_dir: str, build) -> DataFrame:
+    """``memo`` of ``build().localCheckpoint()``: the frame is executed
+    once and served lineage-free to every caller."""
+    return memo(spark, name, sf_dir, lambda: build().localCheckpoint())
+
+
+def rm_parent_dir(path: str) -> None:
+    """Memo cleanup for path values of the form ``<mkdtemp work>/<sub>``:
+    removes the whole work dir."""
+    shutil.rmtree(os.path.dirname(path), ignore_errors=True)
 
 
 def scale_partitions(df: DataFrame, spark: SparkSession) -> DataFrame:

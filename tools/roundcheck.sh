@@ -12,6 +12,9 @@ stage() { echo "=== $1"; }
 stage "pytest (full suite)"
 python -m pytest tests/ -q || fail=1
 
+stage "pytest (benchmark harness)"
+python -m pytest perfbench/tests -q || fail=1
+
 stage "oracle sweep sf0.01 (the driver gate, emulated)"
 python tools/verify_local.py /root/testdata/sf0.01 | tail -3 || fail=1
 

@@ -170,9 +170,9 @@ QUERIES = {
     "curation_export_delta": sampling.curation_export_delta,
     "preference_pair_repair_plan": textops.preference_pair_repair_plan,
     # late-r09 additions: the simhash cutoff sweep (one pass over the
-    # banded pair plan at d<=3 — candidate mass measured exactly linear,
-    # tools/detector_scale_probe.py) and the DPO margin histogram (the
-    # pairing's plan + a |bands|-row groupBy)
+    # banded pair plan at d<=3 — candidate mass measured exactly linear)
+    # and the DPO margin histogram (the pairing's plan + a |bands|-row
+    # groupBy)
     "simhash_threshold_sweep": dedup.simhash_threshold_sweep,
     "preference_margin_histogram": textops.preference_margin_histogram,
     # bucketed-layout manifest: scan-bound like its economics sheet
@@ -212,8 +212,8 @@ QUERIES = {
 #: full ladder accumulates ~45 queries x 3 dirs of checkpointed memo
 #: frames in one heap; by the late rungs that session state inflated
 #: sub-linear builds ~2x (dedup_detector_matrix x8: 14.6 s in-ladder vs
-#: 6.96 s fresh — adjudicated r9 with work counters,
-#: tools/detector_scale_probe.py). Chunking runs each family group in
+#: 6.96 s fresh — adjudicated r9 with work counters).
+#: Chunking runs each family group in
 #: its OWN subprocess/JVM so committed rung numbers ARE the
 #: fresh-session numbers and need no per-round adjudication essay.
 #:
