@@ -191,7 +191,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_pair_counts": textops.bpe_pair_counts,
         # fastText-style hashed linear quality classifier (integer logit)
         "classifier_quality_score": textops.classifier_quality_score,
-        # custom Misra-Gries sketch + exact recount — exact heavy hitters
+        # exact heavy hitters: one tokenize scan + groupBy + threshold
         "heavy_hitters_topk": textops.heavy_hitters_topk,
         # embedding-space benchmark decontamination (broadcast eval side)
         "decontaminate_semantic": similarity.decontaminate_semantic,
@@ -3378,7 +3378,7 @@ def oracle_sql() -> dict[str, str]:
                   FROM c GROUP BY doc_id)
             SELECT doc_id, n_tokens, logit, logit > 0 AS keep FROM g
         """,
-        # exact heavy hitters: the MG sketch proposes, this recount decides
+        # exact heavy hitters: every token with count·(K+1) > total
         "heavy_hitters_topk": f"""
             WITH t AS (SELECT unnest({_TOKS}) AS t FROM documents),
             n AS (SELECT count(*) AS n FROM t)

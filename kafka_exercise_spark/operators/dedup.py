@@ -749,15 +749,14 @@ def _forest_contract_fn():
     (node → local min-root) edge per node. Union-by-min keeps every root
     the smallest id in its local tree, so labels only ever decrease.
 
-    Closure + Arrow (r12, guide §4.5/§4.1, same rationale as the
-    Misra-Gries sketch in textops): Spark hard-kills idle Python workers
-    after 60 s, and a module-level function pickled by reference forces
-    every fresh worker to import this package from the shipped zip plus
-    pandas — seconds of sum_cpu≈0 worker wait per cold fleet inside a
-    long session. The closure pickles by value and the Arrow path needs
-    only pyarrow, so the per-invocation contraction passes
-    (winnow/semantic components run one per call) stay at the fork floor
-    even on a cold pool.
+    Closure + Arrow (r12): Spark hard-kills idle Python workers after
+    60 s, and a module-level function pickled by reference forces every
+    fresh worker to import this package from the shipped zip plus pandas
+    — seconds of sum_cpu≈0 worker wait per cold fleet inside a long
+    session. The closure pickles by value and the Arrow path needs only
+    pyarrow, so the per-invocation contraction passes (winnow/semantic
+    components run one per call) stay at the fork floor even on a cold
+    pool.
     """
 
     def contract(batches):

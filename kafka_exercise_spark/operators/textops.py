@@ -924,108 +924,34 @@ def classifier_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---- heavy hitters: Misra-Gries sketch + exact verification ----
+# ---- heavy hitters: exact threshold set ----
 
-#: Counter budget per partition; the exact-verify threshold is count·(K+1)
-#: > N. MG guarantees any token above that global threshold survives in at
-#: least one partition's sketch (pigeonhole over partition totals).
+#: Heavy-hitter threshold: a token is emitted when count·(HH_K+1) > N,
+#: with N the corpus token total.
 HH_K = 100
 
 
-def _misra_gries_sketch():
-    """Per-partition Misra-Gries (HH_K counters) over a `t` column as a
-    NESTED closure for ``mapInArrow`` — emits the partition's surviving
-    candidate tokens.
-
-    Closure + Arrow on purpose (r12, guide §4.5 / §4.1): Spark's
-    PythonWorkerFactory hard-kills idle Python workers after 60 s, so in
-    a long many-query session this sketch regularly lands on FRESH
-    workers. A module-level function pickles by reference and makes
-    every fresh worker import this package from the shipped zip (plus
-    pandas for mapInPandas) — measured 4 s of sum_cpu≈0 worker wait per
-    cold fleet (event-log: the in-sweep 5-8 s medians were exactly
-    this). The closure pickles by value (no package import; no
-    ship_package needed) and ``mapInArrow`` needs only pyarrow, which
-    the Arrow stream machinery loads anyway — fresh-worker cost drops
-    to the bare fork+pyarrow floor, and the warm path skips the
-    Arrow→pandas transpose per batch.
-    """
-    hh_k = HH_K
-
-    def sketch(batches):
-        import pyarrow as pa  # noqa: PLC0415
-
-        counters: dict[str, int] = {}
-        for b in batches:
-            for t in b.column("t").to_pylist():
-                if t in counters:
-                    counters[t] += 1
-                elif len(counters) < hh_k:
-                    counters[t] = 1
-                else:  # decrement-all step, dropping zeroed counters
-                    drop = [k for k in counters if counters[k] == 1]
-                    for k in counters:
-                        counters[k] -= 1
-                    for k in drop:
-                        del counters[k]
-        if counters:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(list(counters.keys()), type=pa.string())],
-                names=["t"],
-            )
-
-    return sketch
-
-
 def heavy_hitters_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-wide heavy-hitter tokens via a custom Misra-Gries sketch with
-    EXACT output: per-partition MG sketches (Arrow-batched ``mapInArrow``
-    — per-partition imperative counter state is exactly what the sketch
-    is) propose a candidate set that provably contains every token with
-    count·(K+1) > N; an exact recount over just the candidates then kills
-    the false positives. The emitted (token, count) set is therefore a
-    pure function of the corpus — independent of partitioning and engine —
-    even though the sketch itself is order-sensitive.
+    """Corpus-wide heavy-hitter tokens: every token t with
+    count(t)·(HH_K+1) > N, emitted with its exact count.
 
-    100 TB shape: the sketch pass is map-only (K counters per task, no
-    shuffle); the recount shuffles ONLY candidate-token rows (≤ K per
-    partition, a vanishing fraction of the corpus). This is the two-phase
-    pattern any exact-threshold frequent-items job uses at scale.
+    One declared aggregate: a single tokenize scan, ``groupBy(token)``
+    with map-side partial counts, and the corpus total as a sum over the
+    grouped counts in a single-partition window (one row per distinct
+    token, so the total needs no second scan and no driver round-trip).
     """
     from pyspark.sql import Window  # noqa: PLC0415
 
     docs = scale_partitions(load_table(spark, sf_dir, "documents"), spark)
-    exploded = docs.select(F.explode(tokens(F.col("text"))).alias("t"))
-    cand = exploded.mapInArrow(_misra_gries_sketch(), "t string").distinct()
-    # ONE recount pass serves both the per-candidate counts AND the corpus
-    # total (r12, guide §2.3/§2.4; was: a third full tokenize scan just
-    # for the total, crossJoin-broadcast back). Every exploded token is
-    # left-joined to the candidate set and grouped under its own token
-    # when it is a candidate, or under ONE shared NULL key otherwise —
-    # map-side partial aggregation collapses the null group per task, so
-    # the shuffle still carries ≤ |candidates|+1 rows per partition, and
-    # the total is just the sum of ALL group counts (each token lands in
-    # exactly one group). The sum runs as a single-partition window over
-    # that ≤|candidates|+1-row frame — no second scan, no driver
-    # round-trip, no broadcast job. (The r11 lazy-DAG form held nothing
-    # in storage but tokenized the corpus 3×; this form tokenizes 2× —
-    # the MG pass and the recount — which is the floor: the sketch needs
-    # every token and the exact recount needs every token again.)
-    marked = exploded.join(
-        cand.withColumn("is_cand", F.lit(True)), "t", "left"
+    counts = (
+        docs.select(F.explode(tokens(F.col("text"))).alias("token"))
+        .groupBy("token")
+        .agg(F.count("*").alias("cnt"))
     )
-    grouped = marked.groupBy(
-        F.when(F.col("is_cand"), F.col("t")).alias("tk")
-    ).agg(F.count("*").alias("cnt"))
     return (
-        grouped.withColumn(
-            "n_total", F.sum("cnt").over(Window.partitionBy())
-        )
-        .filter(
-            F.col("tk").isNotNull()
-            & (F.col("cnt") * (HH_K + 1) > F.col("n_total"))
-        )
-        .select(F.col("tk").alias("token"), F.col("cnt"))
+        counts.withColumn("n_total", F.sum("cnt").over(Window.partitionBy()))
+        .filter(F.col("cnt") * (HH_K + 1) > F.col("n_total"))
+        .select("token", "cnt")
     )
 
 

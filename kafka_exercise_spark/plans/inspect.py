@@ -11,7 +11,8 @@ scale-up are *pinned by tests* (tests/test_plans.py):
 - dimension joins are broadcast, fact-fact joins are not cartesian
   (``broadcast_join_count`` / ``has_cartesian_product``),
 - the hot path stays JVM-side (``python_eval_count`` == 0 outside the
-  explicitly Pandas-UDF-backed multimodal ops),
+  allowlist in tests/test_plans.py, which names every operator whose
+  Python stage is the design),
 - shuffle count matches the algebraic minimum for the query
   (``shuffle_exchange_count``).
 
@@ -33,7 +34,7 @@ _PYTHON_EVAL_NODES = (
     "FlatMapGroupsInPandas",
     "AggregateInPandas",
     "WindowInPandas",
-    "PythonMapInArrow",
+    "MapInArrow",  # Spark 4 name; also a substring of 3.x PythonMapInArrow
 )
 
 

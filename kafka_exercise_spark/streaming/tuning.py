@@ -21,13 +21,12 @@ query and restores the session afterwards.
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 BOUNDED_REPLAY_CONF = {
-    # 4 state partitions (r12, was 8; env-parameterized): a bounded
+    # 4 state partitions (r12, was 8): a bounded
     # replay's per-key state is MB-scale BY CONSTRUCTION — the profile
     # exists for exactly that shape — so the fixed per-partition cost
     # (one store instance × every stateful operator × every micro-batch
@@ -39,9 +38,7 @@ BOUNDED_REPLAY_CONF = {
     # a state-size-derived number, not a core-count tune: the same
     # bounded replay on a cluster wants the same small constant, and the
     # 24/7 path (PipelineManager) never enters this profile.
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_REPLAY_PARTITIONS", "4"
-    ),
+    "spark.sql.shuffle.partitions": "4",
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state."
         "HDFSBackedStateStoreProvider"

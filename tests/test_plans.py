@@ -215,6 +215,25 @@ def test_ann_bruteforce_is_broadcast(spark, sf_dir):
     assert python_eval_count(df) == 0
 
 
+def test_python_eval_count_sees_map_in_arrow(spark):
+    """Positive control for the Python-stage fence: an Arrow map stage is
+    one Python-eval node (Spark 4 prints it as ``MapInArrow``)."""
+
+    def identity(batches):
+        yield from batches
+
+    df = spark.range(3).mapInArrow(identity, "id long")
+    assert python_eval_count(df) == 1
+
+
+def test_heavy_hitters_is_one_jvm_aggregate(spark, sf_dir):
+    """The exact heavy-hitter set is one declared aggregate: no Python
+    stage and a single tokenize scan of ``documents``."""
+    df = textops.heavy_hitters_topk(spark, sf_dir)
+    assert python_eval_count(df) == 0
+    assert len(read_schema_columns(df)) == 1
+
+
 def test_multimodal_is_the_only_python_path(spark, sf_dir):
     """Pandas-UDF decode plumbing is explicitly Python (and only it)."""
     df = multimodal.multimodal_features(spark, sf_dir)
@@ -389,8 +408,8 @@ def test_ngram_jaccard_reads_shared_shingle_cache(spark, sf_dir):
 def test_no_unexpected_python_eval_nodes_anywhere(spark, sf_dir):
     """Sweeping anti-pattern guard: EVERY batch queries() entry must run
     JVM-side unless it is on the explicit allowlist of operators whose
-    Python stage is the design (Arrow-batched codec / sketch / union-find
-    / multimodal plumbing). A new operator that accidentally introduces a
+    Python stage is the design (Arrow-batched codec / union-find /
+    multimodal plumbing). A new operator that accidentally introduces a
     row-at-a-time UDF fails here, not in a 100 TB run.
 
     Streaming/stateful replays and source ops with side effects are
@@ -407,12 +426,6 @@ def test_no_unexpected_python_eval_nodes_anywhere(spark, sf_dir):
         "multimodal_meta": 1,  # Arrow-batched metadata extraction
         "multimodal_features": 1,
         "multimodal_frame_sample": 0,  # JVM-only byte slicing
-        # r11: the MG sketch (the documented custom Python sketch op) is
-        # now IN the lazy plan — the entry no longer persists the exploded
-        # token frame + localCheckpoints its result per invocation, which
-        # degraded badly under long-session storage churn (9.16 s bench
-        # median vs 1.4 s isolated). One Python node is the design.
-        "heavy_hitters_topk": 1,
         "dedup_components": 0,  # union-find contraction pre-checkpoint
         "dedup_semantic_components": 0,
     }

@@ -58,7 +58,7 @@ SELECTED = [
     ("gopher_quality_filter", "map-only rule battery, all exact integer signals"),
     ("classifier_quality_score", "ONE token shuffle; weight lookup is a literal array"),
     ("bm25_topk", "postings join on shared terms; scalar stats hinted, idf join AQE-decided"),
-    ("heavy_hitters_topk", "lazy MG sketch + exact recount; nothing persisted (r11)"),
+    ("heavy_hitters_topk", "ONE tokenize scan + groupBy; total via 1-partition window"),
     ("ann_ivf_pq_topk", "cells prune, ADC = 4 table lookups/candidate, no folds"),
     ("contamination_report", "composes both decontam plans; flags join per doc"),
     ("er_fuzzy_pairs", "delete-1 blocking equi-join; verify before pair dedup"),

@@ -75,9 +75,9 @@ QUERIES = {
     "token_budget_select": sampling.token_budget_select,  # per-lang window fill
     "chunk_documents": textops.chunk_documents,  # map-only ×(C/S) fan-out
     "zorder_events": lake.zorder_events,  # scan + tiny per-tile agg
-    # r04 additions — inverted-index retrieval and sketch+recount families
+    # r04 additions — inverted-index retrieval and exact heavy hitters
     "bm25_topk": similarity.bm25_topk,  # postings join on shared terms
-    "heavy_hitters_topk": textops.heavy_hitters_topk,  # MG sketch + recount
+    "heavy_hitters_topk": textops.heavy_hitters_topk,  # tokenize + groupBy
     # late-r04 additions — iterative graph, conditional LM, grid fan-out
     "graph_pagerank": graph.graph_pagerank,  # per-iter join+groupBy
     "lm_bigram_score": textops.lm_bigram_score,  # bigram vocab grows w/ corpus
