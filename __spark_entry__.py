@@ -249,8 +249,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_anisotropy": similarity.embedding_anisotropy,
         # batch MERGE INTO: one full-outer join, insert/update/keep audit
         "merge_upsert_profiles": merge_ops.merge_upsert_profiles,
-        # the same MERGE as a live CDC apply: per-micro-batch folds into
-        # versioned stores (idempotent replay); final state ≡ batch merge
+        # the same MERGE as a live CDC apply: the profile aggregate folded
+        # by the stream's state store, then merged; final state ≡ batch merge
         "streaming_merge_replay": streaming_pipeline.streaming_merge_replay,
         # ---- proven entries (hash-green in r01–r03 windows; all still
         # value-checked every session by tools/verify_local.py) ----
@@ -365,7 +365,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_recall_report": similarity.ann_recall_report,
         # incremental index maintenance: batch assign + cell-balance drift
         "ann_index_refresh": similarity.ann_index_refresh,
-        # live CDC staging fold -> nightly SCD2 apply (final ≡ batch)
+        # state-store CDC staging fold -> nightly SCD2 apply (final ≡ batch)
         "streaming_scd2_replay": streaming_pipeline.streaming_scd2_replay,
         # dedup loop closure: per-cluster quality-aware survivor choice
         "dedup_cluster_canonicals": dedup.dedup_cluster_canonicals,
@@ -392,7 +392,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "split_leakage_report": dedup.split_leakage_report,
         # Kafka log-compaction semantics: latest-per-key + tombstone delete
         "log_compaction": merge_ops.log_compaction,
-        # compaction as a LIVE versioned-store fold; final ≡ batch
+        # compaction as a LIVE state-store fold; final ≡ batch
         "streaming_compaction_replay": streaming_pipeline.streaming_compaction_replay,
         # kNN majority-vote label propagation over the embedding corpus
         "knn_label_vote": similarity.knn_label_vote,
@@ -3800,7 +3800,7 @@ def oracle_sql() -> dict[str, str]:
     # so threshold/CTE changes can never drift between the two
     oracles["streaming_neardup_replay"] = oracles["dedup_incremental"]
     # the streaming CDC apply must converge to EXACTLY the batch merge —
-    # same oracle, by design (the fold is commutative-associative)
+    # same oracle, by design (the folded aggregate is order-insensitive)
     oracles["streaming_merge_replay"] = oracles["merge_upsert_profiles"]
     # the streaming staging fold + nightly apply must converge to EXACTLY
     # the one-shot batch SCD2 — same oracle, by design (set after the

@@ -7,7 +7,7 @@ ksqlDB → S3), re-expressed Spark-first:
 - Query layer: DataFrame/SQL on Catalyst (projection, datetime formatting,
   filters, CASE classification, tumbling-window aggregation — SURVEY.md §2.2/§2.3).
 - Pipeline layer: Structured Streaming (watermarked windowed aggregation,
-  checkpointed parquet sinks, keyed-JSON foreachBatch sinks, console sinks —
+  checkpointed parquet sinks, keyed-JSON foreachBatch sinks, memory sinks —
   SURVEY.md §2.1/§2.4) plus a custom incremental timestamp-mode source
   (SURVEY.md §2.1 S3).
 - Scale layer: LLM-training-data operators (dedup, similarity search, text

@@ -7,7 +7,9 @@ Iceberg maintenance statement Spark expresses as one full-outer join with
 per-column CASE logic. The streaming analog already exists here
 (``upsert_store_sink``, latest-write-wins per key); this is the batch
 form with an explicit action audit column, the shape a nightly CDC apply
-job takes.
+job takes. ``merge_apply`` and ``scd2_rows`` take two ``_profiles`` frames,
+so the streaming replays (streaming/pipeline.py) apply a change side that
+Spark's state store folded through the SAME functions.
 
 Fixture framing: per-user profiles built from events BEFORE the split
 instant are the target; events from AFTER it are the change batch. The
@@ -36,14 +38,15 @@ MERGE_SPLIT_US = 1_705_363_200_000_000
 
 
 def _profiles(ev: DataFrame) -> DataFrame:
-    """Per-user profile: event count + deterministic last observation.
+    """Per-user profile: event count, deterministic last observation and
+    first-seen micros.
 
-    The single source of truth for the profile definition — the streaming
-    CDC apply (streaming/pipeline.py streaming_merge_replay) folds batches
-    with EXACTLY this aggregate, and the streamed-equals-batch contract
-    depends on the two sides never drifting. ``last_eid`` is the
-    tie-break's second component, carried so an incremental consumer can
-    continue the same (us, event_id) comparison across batches.
+    The single source of truth for the profile definition. The batch
+    entries aggregate a static frame with it; the streaming replays
+    (streaming/pipeline.py) run the SAME aggregate on the replayed stream,
+    where Spark's state store carries it across micro-batches. Every part
+    is an order-insensitive aggregate (count, min, ``max_by`` on the exact
+    (us, event_id) tuple), so the streamed fold equals the one-shot one.
     """
     us = F.unix_micros(F.col("ts"))
     last = F.max_by(
@@ -62,35 +65,38 @@ def _profiles(ev: DataFrame) -> DataFrame:
             "n_events",
             F.col("last.value").alias("last_value"),
             F.col("last.us").alias("last_seen_us"),
-            F.col("last.event_id").alias("last_eid"),
             "first_us",
         )
     )
 
 
-def merge_upsert_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE the post-split change batch into the pre-split profile table.
+def _merge_join(target: DataFrame, source: DataFrame) -> DataFrame:
+    """target ⟗ source on the merge key, two ``_profiles`` frames in,
+    columns (user_id, t_n, t_v, t_us, t_first, s_n, s_v, s_us, s_first)
+    out."""
+
+    def side(p: DataFrame, pre: str) -> DataFrame:
+        return p.select(
+            "user_id",
+            F.col("n_events").alias(f"{pre}_n"),
+            F.col("last_value").alias(f"{pre}_v"),
+            F.col("last_seen_us").alias(f"{pre}_us"),
+            F.col("first_us").alias(f"{pre}_first"),
+        )
+
+    return side(target, "t").join(side(source, "s"), "user_id", "full_outer")
+
+
+def merge_apply(target: DataFrame, source: DataFrame) -> DataFrame:
+    """MERGE the change-batch profiles into the target profiles.
 
     WHEN MATCHED: n_events accumulates, last_value/last_seen take the
     source side (the batch is strictly later). WHEN NOT MATCHED BY
     TARGET: insert. WHEN NOT MATCHED BY SOURCE: keep. One full-outer
-    join on the merge key.
+    join on the merge key. Shared by ``merge_upsert_profiles`` and
+    ``streaming_merge_replay``.
     """
-    ev = load_table(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts"))
-    target = _profiles(ev.where(us < MERGE_SPLIT_US)).select(
-        "user_id",
-        F.col("n_events").alias("t_n"),
-        F.col("last_value").alias("t_v"),
-        F.col("last_seen_us").alias("t_us"),
-    )
-    source = _profiles(ev.where(us >= MERGE_SPLIT_US)).select(
-        "user_id",
-        F.col("n_events").alias("s_n"),
-        F.col("last_value").alias("s_v"),
-        F.col("last_seen_us").alias("s_us"),
-    )
-    m = target.join(source, "user_id", "full_outer")
+    m = _merge_join(target, source)
     in_t = F.col("t_n").isNotNull()
     in_s = F.col("s_n").isNotNull()
     return m.select(
@@ -104,6 +110,17 @@ def merge_upsert_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(in_s, F.lit("insert"))
         .otherwise(F.lit("keep"))
         .alias("action"),
+    )
+
+
+def merge_upsert_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MERGE the post-split change batch into the pre-split profile table
+    (``merge_apply``)."""
+    ev = load_table(spark, sf_dir, "events")
+    us = F.unix_micros(F.col("ts"))
+    return merge_apply(
+        _profiles(ev.where(us < MERGE_SPLIT_US)),
+        _profiles(ev.where(us >= MERGE_SPLIT_US)),
     )
 
 
@@ -140,29 +157,18 @@ def merge_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
-    target = _profiles(ev.where(us < MERGE_SPLIT_US)).select(
-        "user_id",
-        F.col("n_events").alias("t_n"),
-        F.col("last_value").alias("t_v"),
-        F.col("last_seen_us").alias("t_us"),
-        F.col("first_us").alias("t_first"),
+    return scd2_rows(
+        _profiles(ev.where(us < MERGE_SPLIT_US)),
+        _profiles(ev.where(us >= MERGE_SPLIT_US)),
     )
-    source = _profiles(ev.where(us >= MERGE_SPLIT_US)).select(
-        "user_id",
-        F.col("n_events").alias("s_n"),
-        F.col("last_value").alias("s_v"),
-        F.col("last_seen_us").alias("s_us"),
-        F.col("first_us").alias("s_first"),
-    )
-    return scd2_rows(target.join(source, "user_id", "full_outer"))
 
 
-def scd2_rows(m: DataFrame) -> DataFrame:
-    """The SCD2 close/open/insert/keep projection over a joined frame
-    with columns (user_id, t_n, t_v, t_us, t_first, s_n, s_v, s_us,
-    s_first) — ONE definition shared by the batch apply above and the
-    streaming staging-fold replay (streaming/pipeline.py
-    streaming_scd2_replay), so the two can never drift."""
+def scd2_rows(target: DataFrame, source: DataFrame) -> DataFrame:
+    """The SCD2 close/open/insert/keep projection over target ⟗ source,
+    two ``_profiles`` frames in — ONE definition shared by the batch apply
+    above and ``streaming_scd2_replay``, whose change side is the
+    state-store fold of the same aggregate."""
+    m = _merge_join(target, source)
     in_t = F.col("t_n").isNotNull()
     in_s = F.col("s_n").isNotNull()
     null_us = F.lit(None).cast("long")
@@ -218,6 +224,37 @@ def scd2_rows(m: DataFrame) -> DataFrame:
 TOMBSTONE_BELOW = 2.0
 
 
+def compact_log(ev: DataFrame) -> DataFrame:
+    """Per (user_id, event_type) key: the max-(us, event_id) record and the
+    key's record count, keys whose latest record is a tombstone dropped.
+
+    ONE aggregate, shared by ``log_compaction`` (a static frame) and
+    ``streaming_compaction_replay`` (the replayed stream, folded by Spark's
+    state store). ``max_by`` over a total order and ``count`` are both
+    order-insensitive, so any micro-batch split converges to the same
+    compacted log — the property that lets a broker compact segments in
+    any order.
+    """
+    us = F.unix_micros(F.col("ts")).alias("us")
+    last = F.max_by(
+        F.struct("event_id", "value", "props", us), F.struct(us, "event_id")
+    )
+    return (
+        ev.groupBy("user_id", "event_type")
+        .agg(last.alias("l"), F.count("*").alias("n"))
+        .filter(F.col("l.value") >= TOMBSTONE_BELOW)
+        .select(
+            "user_id",
+            "event_type",
+            F.col("l.event_id").alias("last_event_id"),
+            F.col("l.value").alias("value"),
+            F.col("l.props").alias("props"),
+            F.col("l.us").alias("last_us"),
+            (F.col("n") - 1).cast("long").alias("n_superseded"),
+        )
+    )
+
+
 def log_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kafka log-compaction semantics over the events changelog — the
     log-side dual of MERGE INTO: for every key only the LATEST record
@@ -234,43 +271,8 @@ def log_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     how many superseded records compaction dropped (the log-shrink
     audit a topic owner reads).
 
-    Scale shape: ONE shuffle on the key, shared by both window
-    functions (rank and per-key count — same partitioning, one
-    exchange). NB: the count window's presence blocks Spark's
-    InferWindowGroupLimit rewrite (it only fires on a Filter directly
-    above a lone rank window), so there is no map-side top-1 pruning
-    here — dropping the n_superseded audit column would enable it, a
-    documented trade. At 100 TB keys partition freely (no global
+    Scale shape: one map-side-combined aggregate (``compact_log``), so ONE
+    shuffle on the key. At 100 TB keys partition freely (no global
     order), exactly how broker-side compaction scales by partition.
     """
-    ev = load_table(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts"))
-    from pyspark.sql import Window  # noqa: PLC0415
-
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        F.desc("us"), F.desc("event_id")
-    )
-    # the per-key record count is a SECOND window over the SAME
-    # partitioning — it rides the ranked window's exchange instead of
-    # paying a groupBy + join-back (measured: 2 exchanges + a broadcast
-    # join collapse to the single key shuffle)
-    wk = Window.partitionBy("user_id", "event_type")
-    ranked = (
-        ev.select(
-            "user_id", "event_type", "event_id", "value", "props", us.alias("us")
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .withColumn("n_records", F.count("*").over(wk))
-    )
-    return (
-        ranked.filter((F.col("rk") == 1) & (F.col("value") >= TOMBSTONE_BELOW))
-        .select(
-            "user_id",
-            "event_type",
-            F.col("event_id").alias("last_event_id"),
-            "value",
-            "props",
-            F.col("us").alias("last_us"),
-            (F.col("n_records") - 1).cast("long").alias("n_superseded"),
-        )
-    )
+    return compact_log(load_table(spark, sf_dir, "events"))

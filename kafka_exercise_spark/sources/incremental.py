@@ -33,6 +33,7 @@ import os
 import time
 from collections.abc import Callable
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,7 +78,15 @@ class TimestampModeSource:
         are all NULL) is ignored: NULL-cursor rows can never be captured
         incrementally, and persisting the string 'None' would poison every
         later poll's ``> CAST('None' AS TIMESTAMP)`` predicate into
-        emitting zero rows forever."""
+        emitting zero rows forever.
+
+        A ``datetime`` (what ``collect()`` returns: naive, in the HOST's
+        local zone) is stored as a UTC instant with its offset, which
+        ``poll_once``'s cast reads back exactly whatever the host and
+        session zones are; a string (``run``'s JVM-side max) is stored
+        as is."""
+        if isinstance(max_cursor, datetime):
+            max_cursor = max_cursor.astimezone(timezone.utc).isoformat()
         if max_cursor is not None:
             self._save_hwm(str(max_cursor))
 
@@ -99,9 +108,13 @@ class TimestampModeSource:
             # could capture rows the hwm update then skips forever.
             batch = self.poll_once().persist()
             try:
+                # the max leaves the JVM as a session-zone string, the zone
+                # poll_once's cast reads it back in: a Python datetime
+                # would arrive shifted into the host's local zone
                 new_max, n = (
                     batch.agg(
-                        F.max(self.cursor_col).alias("m"), F.count("*").alias("n")
+                        F.max(self.cursor_col).cast("string").alias("m"),
+                        F.count("*").alias("n"),
                     ).collect()[0]
                 )
                 if n:

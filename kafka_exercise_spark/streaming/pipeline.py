@@ -15,19 +15,30 @@ unbounded implicit state is exactly what breaks at 100 TB.
 
 from __future__ import annotations
 
+import os
+import tempfile
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from kafka_exercise_spark.catalog import memo, rm_parent_dir
+from kafka_exercise_spark.catalog import load_table, memo, rm_parent_dir
+from kafka_exercise_spark.operators.merge import (
+    MERGE_SPLIT_US,
+    _profiles,
+    compact_log,
+    merge_apply,
+    scd2_rows,
+)
 from kafka_exercise_spark.operators.pipeline_ops import (
     custstream_pretty_transform,
     idadeclass_transform,
     idadecont_transform,
 )
 from kafka_exercise_spark.streaming import sinks
+from kafka_exercise_spark.streaming.sources import file_stream, land_events_replay
+from kafka_exercise_spark.streaming.stateful import run_bounded_replay
 
 DEFAULT_WATERMARK = "1 minute"
 
@@ -89,16 +100,6 @@ class PipelineManager:
             ),
         )
 
-    def start_push_query(
-        self, df: DataFrame, name: str, output_mode: str = "append",
-        trigger_once: bool = False,
-    ) -> StreamingQuery:
-        """Transient push query (EMIT CHANGES to a client, README.md:204):
-        memory sink queryable as ``spark.table(name)``."""
-        return self.register(
-            name, sinks.memory_sink(df, name, output_mode, trigger_once=trigger_once)
-        )
-
     def stop_all(self) -> None:
         for q in self.queries.values():
             if q.isActive:
@@ -119,45 +120,31 @@ def streaming_idadecont_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     final state ≡ batch aggregation (the Structured Streaming model), the
     DuckDB oracle is the plain windowed GROUP BY.
     """
-    import os
-    import shutil
-    import tempfile
-
-    from kafka_exercise_spark.streaming.sources import (
-        file_stream,
-        land_events_replay,
-    )
+    from kafka_exercise_spark.functions import timestamptostring
 
     # shared memoized landing (one write per session+sf); ckpt stays fresh
     src_dir, schema = land_events_replay(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="idadecont_replay_ckpt_")
-
     name = "idadecont_replay_contract"
     stream = file_stream(spark, src_dir, schema, max_files_per_trigger=None)
     counted = idadecont_transform(
         idadeclass_transform(stream), watermark_delay=DEFAULT_WATERMARK
     )
-    from kafka_exercise_spark.streaming.stateful import run_bounded_replay
-
-    run_bounded_replay(
-        spark,
-        counted,
-        checkpoint=os.path.join(work, "ckpt"),
-        name=name,
-        output_mode="complete",
-    )
-    from kafka_exercise_spark.functions import timestamptostring
-
+    with tempfile.TemporaryDirectory(prefix="idadecont_replay_ckpt_") as work:
+        run_bounded_replay(
+            spark,
+            counted,
+            checkpoint=os.path.join(work, "ckpt"),
+            name=name,
+            output_mode="complete",
+        )
     # window bounds as strings — same hash-stable shape as the batch
     # idadecont entry (FIXTURES.md §4)
-    result = spark.table(name).select(
+    return spark.table(name).select(
         timestamptostring("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         timestamptostring("window_end", "yyyy-MM-dd HH:mm:ss").alias("window_end"),
         "idadecat",
         "contagem",
     )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 def streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -177,17 +164,9 @@ def streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole fixture, so the oracle is a plain GROUP BY over the same
     CASE logic.
     """
-    import os
-    import tempfile
-
     from kafka_exercise_spark.operators.dataquality import (
         event_row_violations,
     )
-    from kafka_exercise_spark.streaming.sources import (
-        file_stream,
-        land_events_replay,
-    )
-    from kafka_exercise_spark.streaming.stateful import run_bounded_replay
 
     def _gate():
         src_dir, schema = land_events_replay(spark, sf_dir)
@@ -230,24 +209,20 @@ def incremental_source_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     cursor beyond the mark, the connector's ``WHERE dt_update > :hwm``
     capture (reference connect_postgres.config:9-10)."""
     import json
-    import os
-    import tempfile
 
     from kafka_exercise_spark.sources.incremental import TimestampModeSource
 
-    state = os.path.join(tempfile.mkdtemp(prefix="hwm_"), "state.json")
-    with open(state, "w") as f:
-        json.dump({"hwm": "2024-01-16 00:00:00", "cursor_col": "ts"}, f)
-
     def reader(s: SparkSession) -> DataFrame:
-        from kafka_exercise_spark.catalog import load_table
-
         return load_table(s, sf_dir, "events")
 
-    src = TimestampModeSource(spark, reader, cursor_col="ts", state_path=state)
-    return src.poll_once().select(
-        "event_id", "user_id", "event_type", "value", "props"
-    )
+    # poll_once reads the mark when called; the frame does not need the file
+    with tempfile.TemporaryDirectory(prefix="hwm_") as work:
+        state = os.path.join(work, "state.json")
+        with open(state, "w") as f:
+            json.dump({"hwm": "2024-01-16 00:00:00", "cursor_col": "ts"}, f)
+        src = TimestampModeSource(spark, reader, cursor_col="ts", state_path=state)
+        polled = src.poll_once()
+    return polled.select("event_id", "user_id", "event_type", "value", "props")
 
 
 def streaming_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -265,13 +240,7 @@ def streaming_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole fixture rolled up per source, so the oracle is a plain GROUP BY
     over the same signal expressions.
     """
-    import os
-    import tempfile
-
-    from kafka_exercise_spark.catalog import load_table
     from kafka_exercise_spark.operators.textops import curation_decisions
-    from kafka_exercise_spark.streaming.sources import file_stream
-    from kafka_exercise_spark.streaming.stateful import run_bounded_replay
 
     def _gate():
         docs = load_table(spark, sf_dir, "documents").select(
@@ -320,400 +289,94 @@ def streaming_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def streaming_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The batch MERGE (operators/merge.py) as a LIVE CDC apply under real
-    StreamExecution: the pre-split profile table is the initial store,
-    post-split events arrive in micro-batches (2 files per trigger → 4
-    real triggers), and every batch folds into a NEW store version via
-    one full-outer merge — versioned stores make replay idempotent (a
-    re-run of batch k rewrites version k from version k−1, never
-    double-counts). Final state ≡ the batch merge, which is the oracle.
-
-    The fold is commutative-associative by construction: counts ADD, and
-    the last-observation fields compare on the exact (micros, event_id)
-    tuple — so out-of-order micro-batches converge to the same state the
-    one-shot batch merge computes, which is the property that makes a
-    streaming CDC apply trustworthy at all. ``init``/``touched`` flags
-    ride along in the store so the final action audit (insert / update /
-    keep) needs no second pass over history.
-    """
-    import os
-    import shutil
-    import tempfile
-
-    from kafka_exercise_spark.operators.merge import (
-        MERGE_SPLIT_US,
-        _profiles,
-    )
-    from kafka_exercise_spark.streaming.sources import (
-        file_stream,
-        land_events_replay,
-    )
-    from kafka_exercise_spark.streaming.stateful import run_bounded_replay
-
-    def profiles(df: DataFrame) -> DataFrame:
-        # THE batch profile aggregate (merge._profiles — single source of
-        # truth for the streamed-equals-batch contract), store column names
-        return _profiles(df).select(
-            "user_id",
-            F.col("n_events").alias("n"),
-            F.col("last_value").alias("v"),
-            F.col("last_seen_us").alias("us"),
-            F.col("last_eid").alias("eid"),
-        )
-
-    def _replay():
-        src_dir, schema = land_events_replay(spark, sf_dir)
-        work = tempfile.mkdtemp(prefix="merge_replay_")
-        store = os.path.join(work, "store")
-        os.makedirs(store)
-
-        # initial store: the pre-split target, flags (init=T, touched=F)
-        target = profiles(
-            spark.read.schema(schema)
-            .parquet(src_dir)
-            .where(F.unix_micros(F.col("ts")) < MERGE_SPLIT_US)
-        ).select(
-            "*", F.lit(True).alias("init"), F.lit(False).alias("touched")
-        )
-        target.write.parquet(os.path.join(store, "v_init"))
-
-        def _version_before(batch_id: int) -> str:
-            """Latest on-disk store version STRICTLY before this batch —
-            so a re-delivered batch k always folds into k's true
-            predecessor, never into its own output (the idempotency the
-            docstring promises), and a restart resumes from disk state
-            rather than driver memory."""
-            prior = [
-                int(d[1:])
-                for d in os.listdir(store)
-                if d != "v_init" and d.startswith("v") and int(d[1:]) < batch_id
-            ]
-            return f"v{max(prior):04d}" if prior else "v_init"
-
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            b = profiles(
-                batch_df.where(F.unix_micros(F.col("ts")) >= MERGE_SPLIT_US)
-            ).select(
-                F.col("user_id"),
-                F.col("n").alias("b_n"),
-                F.col("v").alias("b_v"),
-                F.col("us").alias("b_us"),
-                F.col("eid").alias("b_eid"),
-            )
-            prev = spark.read.parquet(
-                os.path.join(store, _version_before(batch_id))
-            )
-            in_b = F.col("b_n").isNotNull()
-            in_t = F.col("n").isNotNull()
-            # the batch side wins the last-observation fields iff its
-            # (us, eid) tuple is strictly greater — out-of-order-safe
-            b_newer = in_b & (
-                ~in_t
-                | (F.col("b_us") > F.col("us"))
-                | ((F.col("b_us") == F.col("us")) & (F.col("b_eid") > F.col("eid")))
-            )
-            merged = (
-                prev.join(b, "user_id", "full_outer")
-                .select(
-                    "user_id",
-                    (F.coalesce("n", F.lit(0)) + F.coalesce("b_n", F.lit(0)))
-                    .cast("long")
-                    .alias("n"),
-                    F.when(b_newer, F.col("b_v")).otherwise(F.col("v")).alias("v"),
-                    F.when(b_newer, F.col("b_us")).otherwise(F.col("us")).alias("us"),
-                    F.when(b_newer, F.col("b_eid")).otherwise(F.col("eid")).alias("eid"),
-                    F.coalesce("init", F.lit(False)).alias("init"),
-                    (F.coalesce("touched", F.lit(False)) | in_b).alias("touched"),
-                )
-            )
-            vname = f"v{batch_id:04d}"
-            merged.write.mode("overwrite").parquet(os.path.join(store, vname))
-
-        stream = file_stream(spark, src_dir, schema, max_files_per_trigger=2)
+def _state_store_fold(spark: SparkSession, sf_dir: str, name: str, fold) -> DataFrame:
+    """Run ``fold`` — a per-key aggregate — on the events landing replayed
+    as a REAL multi-batch stream (8 files, 2 per trigger → 4 triggers) in
+    complete mode: Spark's state store carries the aggregate across
+    micro-batches, and the memory sink ``name`` holds its final state,
+    which is returned. The checkpoint dir goes away with the run, failed
+    or not; the memory table does not live in it."""
+    src_dir, schema = land_events_replay(spark, sf_dir)
+    stream = file_stream(spark, src_dir, schema, max_files_per_trigger=2)
+    with tempfile.TemporaryDirectory(prefix=f"{name}_ckpt_") as work:
         run_bounded_replay(
             spark,
-            stream,
+            fold(stream),
             checkpoint=os.path.join(work, "ckpt"),
-            foreach_batch=apply_batch,
+            name=name,
+            output_mode="complete",
         )
-        final = (
-            spark.read.parquet(
-                os.path.join(store, _version_before(1 << 30))
-            )
-            .select(
-                "user_id",
-                F.col("n").alias("n_events"),
-                F.col("v").alias("last_value"),
-                F.col("us").alias("last_seen_us"),
-                F.when(F.col("init") & F.col("touched"), F.lit("update"))
-                .when(~F.col("init"), F.lit("insert"))
-                .otherwise(F.lit("keep"))
-                .alias("action"),
-            )
-            .localCheckpoint()
-        )
-        shutil.rmtree(work, ignore_errors=True)
-        return final
+    return spark.table(name)
+
+
+def _replayed_profiles(
+    spark: SparkSession, sf_dir: str, name: str
+) -> tuple[DataFrame, DataFrame]:
+    """(pre-split target, post-split change) ``_profiles`` frames; the
+    change side is the state-store fold of the replayed stream."""
+    us = F.unix_micros(F.col("ts"))
+    target = _profiles(
+        load_table(spark, sf_dir, "events").where(us < MERGE_SPLIT_US)
+    )
+    changes = _state_store_fold(
+        spark, sf_dir, name, lambda ev: _profiles(ev.where(us >= MERGE_SPLIT_US))
+    )
+    return target, changes
+
+
+def streaming_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The batch MERGE (operators/merge.py) as a LIVE CDC apply under real
+    StreamExecution: the post-split change profiles are the SAME
+    ``_profiles`` aggregate run on the replayed stream, folded across
+    micro-batches by Spark's state store, then applied to the pre-split
+    target through the SAME ``merge_apply`` the batch entry uses. The
+    aggregate is order-insensitive (count, min, ``max_by`` on the exact
+    (us, event_id) tuple), so any micro-batch split converges to the
+    one-shot batch merge, which is the oracle; the state store's
+    checkpointed versions make a re-delivered batch idempotent.
+    """
+
+    def _replay():
+        return merge_apply(
+            *_replayed_profiles(spark, sf_dir, "merge_replay_contract")
+        ).localCheckpoint()
 
     return memo(spark, "merge_replay", sf_dir, _replay)
 
 
 def streaming_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SCD2 apply (operators/merge.py merge_scd2_apply) fed by a LIVE
-    CDC staging fold: post-split events arrive in micro-batches under
-    real StreamExecution, each batch folds into a versioned STAGING
-    profile store (count adds, last-observation (us, eid) max-wins,
-    first-seen min-wins — commutative-associative, so out-of-order
-    batches converge), and the close-old/open-new history apply runs
-    once over the final staging — the nightly-apply pattern a warehouse
-    actually runs against a streaming-landed CDC staging table.
-
-    Final history ≡ the one-shot batch SCD2 (same `scd2_rows` projection,
-    same oracle by design); versioned stores make a re-delivered batch
-    idempotent, exactly like ``streaming_merge_replay``.
+    CDC staging fold: the post-split change profiles are the SAME
+    ``_profiles`` aggregate run on the replayed stream and folded by
+    Spark's state store, and the close-old/open-new history apply runs
+    once over the final staging through the SAME ``scd2_rows`` — the
+    nightly-apply pattern a warehouse runs against a streaming-landed CDC
+    staging table. Final history ≡ the one-shot batch SCD2, same oracle.
     """
-    import os
-    import shutil
-    import tempfile
-
-    from kafka_exercise_spark.operators.merge import (
-        MERGE_SPLIT_US,
-        _profiles,
-        scd2_rows,
-    )
-    from kafka_exercise_spark.streaming.sources import (
-        file_stream,
-        land_events_replay,
-    )
-    from kafka_exercise_spark.streaming.stateful import run_bounded_replay
 
     def _replay():
-        src_dir, schema = land_events_replay(spark, sf_dir)
-        work = tempfile.mkdtemp(prefix="scd2_replay_")
-        store = os.path.join(work, "staging")
-        os.makedirs(store)
-        # empty initial staging — the batch side accumulates from nothing
-        empty = spark.createDataFrame(
-            [],
-            "user_id long, n long, v double, us long, eid long, fus long",
-        )
-        empty.write.parquet(os.path.join(store, "v_init"))
-
-        def _version_before(batch_id: int) -> str:
-            prior = [
-                int(d[1:])
-                for d in os.listdir(store)
-                if d != "v_init" and d.startswith("v") and int(d[1:]) < batch_id
-            ]
-            return f"v{max(prior):04d}" if prior else "v_init"
-
-        def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-            b = _profiles(
-                batch_df.where(F.unix_micros(F.col("ts")) >= MERGE_SPLIT_US)
-            ).select(
-                "user_id",
-                F.col("n_events").alias("b_n"),
-                F.col("last_value").alias("b_v"),
-                F.col("last_seen_us").alias("b_us"),
-                F.col("last_eid").alias("b_eid"),
-                F.col("first_us").alias("b_fus"),
-            )
-            prev = spark.read.parquet(
-                os.path.join(store, _version_before(batch_id))
-            )
-            in_b = F.col("b_n").isNotNull()
-            in_p = F.col("n").isNotNull()
-            b_newer = in_b & (
-                ~in_p
-                | (F.col("b_us") > F.col("us"))
-                | (
-                    (F.col("b_us") == F.col("us"))
-                    & (F.col("b_eid") > F.col("eid"))
-                )
-            )
-            folded = prev.join(b, "user_id", "full_outer").select(
-                "user_id",
-                (F.coalesce("n", F.lit(0)) + F.coalesce("b_n", F.lit(0)))
-                .cast("long")
-                .alias("n"),
-                F.when(b_newer, F.col("b_v")).otherwise(F.col("v")).alias("v"),
-                F.when(b_newer, F.col("b_us"))
-                .otherwise(F.col("us"))
-                .alias("us"),
-                F.when(b_newer, F.col("b_eid"))
-                .otherwise(F.col("eid"))
-                .alias("eid"),
-                F.least(
-                    F.coalesce("fus", F.col("b_fus")),
-                    F.coalesce("b_fus", F.col("fus")),
-                )
-                .cast("long")
-                .alias("fus"),
-            )
-            folded.write.mode("overwrite").parquet(
-                os.path.join(store, f"v{batch_id:04d}")
-            )
-
-        stream = file_stream(spark, src_dir, schema, max_files_per_trigger=2)
-        run_bounded_replay(
-            spark,
-            stream,
-            checkpoint=os.path.join(work, "ckpt"),
-            foreach_batch=fold_batch,
-        )
-        # nightly apply: deterministic pre-split target ⟗ final staging,
-        # through the ONE shared SCD2 projection
-        target = _profiles(
-            spark.read.schema(schema)
-            .parquet(src_dir)
-            .where(F.unix_micros(F.col("ts")) < MERGE_SPLIT_US)
-        ).select(
-            "user_id",
-            F.col("n_events").alias("t_n"),
-            F.col("last_value").alias("t_v"),
-            F.col("last_seen_us").alias("t_us"),
-            F.col("first_us").alias("t_first"),
-        )
-        staging = spark.read.parquet(
-            os.path.join(store, _version_before(1 << 30))
-        ).select(
-            "user_id",
-            F.col("n").alias("s_n"),
-            F.col("v").alias("s_v"),
-            F.col("us").alias("s_us"),
-            F.col("fus").alias("s_first"),
-        )
-        final = scd2_rows(
-            target.join(staging, "user_id", "full_outer")
+        return scd2_rows(
+            *_replayed_profiles(spark, sf_dir, "scd2_replay_contract")
         ).localCheckpoint()
-        shutil.rmtree(work, ignore_errors=True)
-        return final
 
     return memo(spark, "scd2_replay", sf_dir, _replay)
 
 
 def streaming_compaction_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log compaction as the LIVE process it actually is on a broker: the
-    events changelog arrives in micro-batches under real StreamExecution,
-    each batch first compacts ITSELF (per-key latest + record count — the
-    map-side combine of compaction), then folds into a versioned store
-    that keeps the max-(us, event_id) record per key and adds counts.
-    The final store with tombstones filtered hash-equals the batch
-    ``operators/merge.log_compaction`` — the SAME oracle, by design.
-
-    The fold is commutative-associative (counts add; the surviving record
-    is the max under a total order), so out-of-order micro-batches
-    converge to broker-compaction state — the property that lets Kafka
-    compact segments in any order. Versioned stores make redelivery
-    idempotent, same contract as the merge/SCD2 replays.
+    events changelog arrives in micro-batches under real StreamExecution
+    and the SAME ``compact_log`` aggregate as the batch
+    ``operators/merge.log_compaction`` folds them in Spark's state store
+    (max-(us, event_id) record per key, counts add). The final state with
+    tombstones filtered equals the batch compaction — the SAME oracle, by
+    design — whatever the micro-batch split, the property that lets Kafka
+    compact segments in any order.
     """
-    import os
-    import shutil
-    import tempfile
-
-    from kafka_exercise_spark.operators.merge import TOMBSTONE_BELOW
-    from kafka_exercise_spark.streaming.sources import (
-        file_stream,
-        land_events_replay,
-    )
-    from kafka_exercise_spark.streaming.stateful import run_bounded_replay
-
-    def compact(df: DataFrame) -> DataFrame:
-        us = F.unix_micros(F.col("ts"))
-        last = F.max_by(
-            F.struct("event_id", "value", "props"),
-            F.struct(us.alias("us"), "event_id"),
-        )
-        return (
-            df.groupBy("user_id", "event_type")
-            .agg(
-                last.alias("l"),
-                F.max(F.struct(us.alias("us"), "event_id")).alias("mx"),
-                F.count("*").alias("n"),
-            )
-            .select(
-                "user_id",
-                "event_type",
-                F.col("l.event_id").alias("eid"),
-                F.col("l.value").alias("v"),
-                F.col("l.props").alias("p"),
-                F.col("mx.us").alias("us"),
-                "n",
-            )
-        )
 
     def _replay():
-        src_dir, schema = land_events_replay(spark, sf_dir)
-        work = tempfile.mkdtemp(prefix="compaction_replay_")
-        store = os.path.join(work, "store")
-        os.makedirs(store)
-        spark.createDataFrame(
-            [],
-            "user_id long, event_type string, eid long, v double,"
-            " p string, us long, n long",
-        ).write.parquet(os.path.join(store, "v_init"))
-
-        def _version_before(batch_id: int) -> str:
-            prior = [
-                int(d[1:])
-                for d in os.listdir(store)
-                if d != "v_init" and d.startswith("v") and int(d[1:]) < batch_id
-            ]
-            return f"v{max(prior):04d}" if prior else "v_init"
-
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            b = compact(batch_df).withColumnsRenamed(
-                {"eid": "b_eid", "v": "b_v", "p": "b_p", "us": "b_us", "n": "b_n"}
-            )
-            prev = spark.read.parquet(
-                os.path.join(store, _version_before(batch_id))
-            )
-            in_b = F.col("b_n").isNotNull()
-            in_t = F.col("n").isNotNull()
-            b_newer = in_b & (
-                ~in_t
-                | (F.col("b_us") > F.col("us"))
-                | ((F.col("b_us") == F.col("us")) & (F.col("b_eid") > F.col("eid")))
-            )
-            merged = prev.join(b, ["user_id", "event_type"], "full_outer").select(
-                "user_id",
-                "event_type",
-                F.when(b_newer, F.col("b_eid")).otherwise(F.col("eid")).alias("eid"),
-                F.when(b_newer, F.col("b_v")).otherwise(F.col("v")).alias("v"),
-                F.when(b_newer, F.col("b_p")).otherwise(F.col("p")).alias("p"),
-                F.when(b_newer, F.col("b_us")).otherwise(F.col("us")).alias("us"),
-                (F.coalesce("n", F.lit(0)) + F.coalesce("b_n", F.lit(0)))
-                .cast("long")
-                .alias("n"),
-            )
-            merged.write.mode("overwrite").parquet(
-                os.path.join(store, f"v{batch_id:04d}")
-            )
-
-        stream = file_stream(spark, src_dir, schema, max_files_per_trigger=2)
-        run_bounded_replay(
-            spark,
-            stream,
-            checkpoint=os.path.join(work, "ckpt"),
-            foreach_batch=apply_batch,
-        )
-        final = (
-            spark.read.parquet(os.path.join(store, _version_before(1 << 30)))
-            .filter(F.col("v") >= TOMBSTONE_BELOW)
-            .select(
-                "user_id",
-                "event_type",
-                F.col("eid").alias("last_event_id"),
-                F.col("v").alias("value"),
-                F.col("p").alias("props"),
-                F.col("us").alias("last_us"),
-                (F.col("n") - 1).cast("long").alias("n_superseded"),
-            )
-            .localCheckpoint()
-        )
-        shutil.rmtree(work, ignore_errors=True)
-        return final
+        return _state_store_fold(
+            spark, sf_dir, "compaction_replay_contract", compact_log
+        ).localCheckpoint()
 
     return memo(spark, "compaction_replay", sf_dir, _replay)
 
@@ -737,50 +400,40 @@ def streaming_model_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     no state store, no corpus access. Results append to a parquet sink
     dir (exactly-once via the foreachBatch append + file-source log).
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    from kafka_exercise_spark.catalog import load_table  # noqa: PLC0415
     from kafka_exercise_spark.operators.dedup import _split_of  # noqa: PLC0415
     from kafka_exercise_spark.operators.textops import (  # noqa: PLC0415
         perceptron_featurize,
         perceptron_model_weights,
         perceptron_score,
     )
-    from kafka_exercise_spark.streaming.sources import file_stream  # noqa: PLC0415
-    from kafka_exercise_spark.streaming.stateful import (  # noqa: PLC0415
-        run_bounded_replay,
-    )
 
     def _replay():
         w = perceptron_model_weights(spark, sf_dir)
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        work = tempfile.mkdtemp(prefix="model_gate_")
-        src = os.path.join(work, "src")
-        out = os.path.join(work, "out")
-        docs.repartition(4).write.mode("overwrite").parquet(src)
-        schema = docs.schema
+        with tempfile.TemporaryDirectory(prefix="model_gate_") as work:
+            src = os.path.join(work, "src")
+            out = os.path.join(work, "out")
+            docs.repartition(4).write.mode("overwrite").parquet(src)
+            schema = docs.schema
 
-        def score(batch_df: DataFrame, batch_id: int) -> None:
-            scored = perceptron_score(perceptron_featurize(batch_df), w)
-            scored.select(
-                "doc_id",
-                _split_of(F.col("doc_id")).alias("split"),
-                "margin",
-                "keep",
-            ).write.mode("append").parquet(out)
+            def score(batch_df: DataFrame, batch_id: int) -> None:
+                scored = perceptron_score(perceptron_featurize(batch_df), w)
+                scored.select(
+                    "doc_id",
+                    _split_of(F.col("doc_id")).alias("split"),
+                    "margin",
+                    "keep",
+                ).write.mode("append").parquet(out)
 
-        stream = file_stream(spark, src, schema, max_files_per_trigger=2)
-        run_bounded_replay(
-            spark,
-            stream,
-            checkpoint=os.path.join(work, "ckpt"),
-            name="model_gate_contract",
-            foreach_batch=score,
-        )
-        final = spark.read.parquet(out).localCheckpoint()
-        shutil.rmtree(work, ignore_errors=True)
+            stream = file_stream(spark, src, schema, max_files_per_trigger=2)
+            run_bounded_replay(
+                spark,
+                stream,
+                checkpoint=os.path.join(work, "ckpt"),
+                name="model_gate_contract",
+                foreach_batch=score,
+            )
+            final = spark.read.parquet(out).localCheckpoint()
         return final
 
     return memo(spark, "model_gate", sf_dir, _replay)
@@ -808,11 +461,6 @@ def streaming_model_update_replay(
     landed partials. This is the parameter-server gradient-push shape:
     workers push bounded deltas, the fold applies them once per round.
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    from kafka_exercise_spark.catalog import load_table  # noqa: PLC0415
     from kafka_exercise_spark.operators.dedup import (  # noqa: PLC0415
         INCREMENTAL_NEW_SOURCE,
     )
@@ -823,10 +471,6 @@ def streaming_model_update_replay(
         perceptron_model_weights,
         perceptron_score,
     )
-    from kafka_exercise_spark.streaming.sources import file_stream  # noqa: PLC0415
-    from kafka_exercise_spark.streaming.stateful import (  # noqa: PLC0415
-        run_bounded_replay,
-    )
 
     def _replay():
         w = perceptron_model_weights(spark, sf_dir)
@@ -835,66 +479,65 @@ def streaming_model_update_replay(
             .filter(F.col("source") == INCREMENTAL_NEW_SOURCE)
             .select("doc_id", "text")
         )
-        work = tempfile.mkdtemp(prefix="model_update_")
-        src = os.path.join(work, "src")
-        out = os.path.join(work, "out")
-        docs.repartition(4).write.mode("overwrite").parquet(src)
-        schema = docs.schema
+        with tempfile.TemporaryDirectory(prefix="model_update_") as work:
+            src = os.path.join(work, "src")
+            out = os.path.join(work, "out")
+            docs.repartition(4).write.mode("overwrite").parquet(src)
+            schema = docs.schema
 
-        def push_deltas(batch_df: DataFrame, batch_id: int) -> None:
-            feats = perceptron_featurize(batch_df)
-            labels = gopher_decisions(batch_df).select(
-                "doc_id",
-                F.when(F.col("keep"), F.lit(1))
-                .otherwise(F.lit(-1))
-                .cast("long")
-                .alias("y"),
+            def push_deltas(batch_df: DataFrame, batch_id: int) -> None:
+                feats = perceptron_featurize(batch_df)
+                labels = gopher_decisions(batch_df).select(
+                    "doc_id",
+                    F.when(F.col("keep"), F.lit(1))
+                    .otherwise(F.lit(-1))
+                    .cast("long")
+                    .alias("y"),
+                )
+                miscl = (
+                    perceptron_score(feats, w)
+                    .join(labels, "doc_id")
+                    .filter(F.col("y") * F.col("margin") <= 0)
+                    .select("doc_id", "y")
+                )
+                (
+                    feats.join(miscl, "doc_id")
+                    .groupBy("bucket")
+                    .agg(F.sum(F.col("y") * F.col("cnt")).cast("long").alias("dw"))
+                    .write.mode("append")
+                    .parquet(out)
+                )
+
+            stream = file_stream(spark, src, schema, max_files_per_trigger=2)
+            run_bounded_replay(
+                spark,
+                stream,
+                checkpoint=os.path.join(work, "ckpt"),
+                name="model_update_contract",
+                foreach_batch=push_deltas,
             )
-            miscl = (
-                perceptron_score(feats, w)
-                .join(labels, "doc_id")
-                .filter(F.col("y") * F.col("margin") <= 0)
-                .select("doc_id", "y")
-            )
-            (
-                feats.join(miscl, "doc_id")
+            folded = (
+                spark.read.parquet(out)
                 .groupBy("bucket")
-                .agg(F.sum(F.col("y") * F.col("cnt")).cast("long").alias("dw"))
-                .write.mode("append")
-                .parquet(out)
+                .agg(F.sum("dw").cast("long").alias("dw"))
             )
-
-        stream = file_stream(spark, src, schema, max_files_per_trigger=2)
-        run_bounded_replay(
-            spark,
-            stream,
-            checkpoint=os.path.join(work, "ckpt"),
-            name="model_update_contract",
-            foreach_batch=push_deltas,
-        )
-        folded = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(F.sum("dw").cast("long").alias("dw"))
-        )
-        w_lit = F.lit(w).cast("array<bigint>")
-        grid = spark.range(PERC_DIM).select(
-            F.col("id").cast("int").alias("bucket")
-        )
-        w_before = F.element_at(w_lit, F.col("bucket") + 1)
-        final = (
-            grid.join(folded, "bucket", "left")
-            .select(
-                F.col("bucket").cast("long").alias("bucket"),
-                w_before.cast("long").alias("w_before"),
-                F.coalesce(F.col("dw"), F.lit(0)).cast("long").alias("dw"),
-                (w_before + F.coalesce(F.col("dw"), F.lit(0)))
-                .cast("long")
-                .alias("w_after"),
+            w_lit = F.lit(w).cast("array<bigint>")
+            grid = spark.range(PERC_DIM).select(
+                F.col("id").cast("int").alias("bucket")
             )
-            .localCheckpoint()
-        )
-        shutil.rmtree(work, ignore_errors=True)
+            w_before = F.element_at(w_lit, F.col("bucket") + 1)
+            final = (
+                grid.join(folded, "bucket", "left")
+                .select(
+                    F.col("bucket").cast("long").alias("bucket"),
+                    w_before.cast("long").alias("w_before"),
+                    F.coalesce(F.col("dw"), F.lit(0)).cast("long").alias("dw"),
+                    (w_before + F.coalesce(F.col("dw"), F.lit(0)))
+                    .cast("long")
+                    .alias("w_after"),
+                )
+                .localCheckpoint()
+            )
         return final
 
     return memo(spark, "model_update", sf_dir, _replay)
@@ -932,10 +575,6 @@ def streaming_soft_draw_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the O(near-dup) served frame — AQE broadcasts while it fits — and
     map-side expressions).
     """
-    import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    from kafka_exercise_spark.catalog import load_table  # noqa: PLC0415
     from kafka_exercise_spark.functions.text import (  # noqa: PLC0415
         md5_hash64,
         tokens,
@@ -943,12 +582,6 @@ def streaming_soft_draw_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_exercise_spark.operators.dedup import (  # noqa: PLC0415
         SOFT_WEIGHT_PPM_EXPR,
         dedup_components,
-    )
-    from kafka_exercise_spark.streaming.sources import (  # noqa: PLC0415
-        file_stream,
-    )
-    from kafka_exercise_spark.streaming.stateful import (  # noqa: PLC0415
-        run_bounded_replay,
     )
 
     def _draw():

@@ -8,8 +8,12 @@
   objects *including the record key columns*. Spark's file sink is
   append-only, so this is ``foreachBatch`` writing each micro-batch's
   updates — the documented pattern for changelog→file export.
-- **console_sink / memory_sink** — S8 inspection surfaces
-  (reference README.md:180, 204).
+- **avro_topic_sink** — CSAS into an Avro-valued topic, as Confluent-framed
+  binary values (S5); ``read_avro_topic`` decodes the landing back.
+- **upsert_store_sink** — changelog → keyed store, latest write wins (T7).
+
+The S8 inspection surface (push query / ``print topic``) is the memory sink
+``stateful.run_bounded_replay`` writes for every contract replay.
 
 Every sink takes an explicit checkpoint dir: the engine-side analog of the
 Connect offsets topic (reference docker-compose.yml:70-76).
@@ -30,7 +34,6 @@ def parquet_sink(
     name: str,
     max_records_per_file: int = 10,
     trigger_once: bool = False,
-    processing_time: str | None = None,
 ) -> StreamingQuery:
     writer = (
         df.writeStream.format("parquet")
@@ -42,8 +45,6 @@ def parquet_sink(
     )
     if trigger_once:
         writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
     return writer.start()
 
 
@@ -212,23 +213,3 @@ def upsert_store_sink(
     if trigger_once:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def memory_sink(
-    df: DataFrame, name: str, output_mode: str = "append", trigger_once: bool = False
-) -> StreamingQuery:
-    """In-memory table sink — the push-query surface (README.md:204)."""
-    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def console_sink(df: DataFrame, name: str, output_mode: str = "append") -> StreamingQuery:
-    return (
-        df.writeStream.format("console")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("truncate", "false")
-        .start()
-    )

@@ -1,15 +1,16 @@
 """Streaming sources behind one small interface (SURVEY.md §2.1 S1/S4, §7 C).
 
-Three source families, mirroring the reference topology:
+Source families, mirroring the reference topology:
 
 - **file_stream** — checkpointable parquet-directory stream; with
   ``maxFilesPerTrigger`` it replays bounded fixtures as micro-batches (the
   test strategy of SURVEY.md §5), and unbounded it is the bronze-landing
   consumer (the engine-side analog of subscribing to the Kafka topic the
   JDBC connector feeds, reference README.md:186).
-- **rate_stream** — synthetic generator analog of ``make_fake_data.py``
-  (reference make_fake_data.py:53-81): rows/sec offered load with derived
-  deterministic columns.
+- **land_events_replay** — the memoized n-file landing of ``events`` that
+  every bounded replay streams from (only checkpoints stay per run).
+- **avro_topic_stream** — the S4 chain (subscribe → Avro decode) over an
+  Avro-valued topic landing.
 - **kafka_stream** — the real topic source (reference README.md:180-186),
   declared but import-gated: no broker exists in this container, so it
   builds the reader config without starting it.
@@ -21,7 +22,6 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from kafka_exercise_spark.catalog import load_table, memo, rm_parent_dir
@@ -71,27 +71,6 @@ def file_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
-
-
-def rate_stream(
-    spark: SparkSession, rows_per_second: int = 2, event_types: int = 5
-) -> DataFrame:
-    """Synthetic event stream ≙ the Faker generator's offered-load shape
-    (reference make_fake_data.py:28-31 defaults to 2 rows/s). Deterministic
-    column derivations — no RNG, so replays are reproducible."""
-    raw = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-    return raw.select(
-        F.col("value").alias("event_id"),
-        F.col("timestamp").alias("ts"),
-        (F.col("value") % 100).alias("user_id"),
-        F.concat(F.lit("type_"), (F.col("value") % event_types)).alias("event_type"),
-        (F.pmod(F.col("value") * 37, 200) / F.lit(1.0)).alias("value"),
-        F.to_json(F.struct((F.col("value") % 97).alias("k"))).alias("props"),
-    )
 
 
 def avro_topic_stream(

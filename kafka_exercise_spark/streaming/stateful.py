@@ -31,28 +31,12 @@ from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from kafka_exercise_spark.catalog import memo
 from kafka_exercise_spark.streaming.sources import file_stream, land_events_replay
 from kafka_exercise_spark.streaming.tuning import bounded_replay_conf
 
 CONVERSION_WINDOW = "15 minutes"
-
-
-def _events_replay(
-    spark: SparkSession, sf_dir: str, n_files: int = 8
-) -> tuple[str, str, StructType]:
-    """Bounded-replay inputs: (ckpt_workdir, src_dir, schema).
-
-    The landing dir is memo-served per (sf_dir, n_files) and shared across
-    every replay entry (sources.land_events_replay); only the checkpoint
-    dir — which StreamExecution mutates — is fresh per call. Callers
-    rmtree the returned workdir, never the shared landing.
-    """
-    src, schema = land_events_replay(spark, sf_dir, n_files)
-    work = tempfile.mkdtemp(prefix="stateful_replay_ckpt_")
-    return work, src, schema
 
 
 def _fresh_memory_query(spark: SparkSession, name: str) -> None:
@@ -175,7 +159,7 @@ def streaming_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver contract: the conversion join run by StreamExecution over a
     bounded replay, aggregated per user. Final rows ≡ the batch interval
     join, so the oracle is plain SQL."""
-    work, src, schema = _events_replay(spark, sf_dir)
+    src, schema = land_events_replay(spark, sf_dir)
     name = "conversion_join_contract"
     stream = file_stream(spark, src, schema, max_files_per_trigger=None)
     joined = conversion_join(
@@ -188,11 +172,12 @@ def streaming_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single largest cost of this replay), and that state dies with the
     # checkpoint dir below. Output is batch-equivalent either way —
     # oracle-verified at sf0.001/0.01/0.1 (r12).
-    run_bounded_replay(
-        spark, joined, checkpoint=os.path.join(work, "ckpt"),
-        name=name, output_mode="append", final_no_data_batch=False,
-    )
-    result = (
+    with tempfile.TemporaryDirectory(prefix="join_replay_ckpt_") as work:
+        run_bounded_replay(
+            spark, joined, checkpoint=os.path.join(work, "ckpt"),
+            name=name, output_mode="append", final_no_data_batch=False,
+        )
+    return (
         spark.table(name)
         .groupBy("user_id")
         .agg(
@@ -200,8 +185,6 @@ def streaming_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("p_value"), 2).alias("conv_value"),
         )
     )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,7 +195,7 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the batch DISTINCT. Key-only projection keeps the surviving-row
     choice (which is arrival-order-dependent) out of the checked value.
     """
-    work, src, schema = _events_replay(spark, sf_dir)
+    src, schema = land_events_replay(spark, sf_dir)
     name = "dedup_contract"
     stream = file_stream(spark, src, schema, max_files_per_trigger=2)
     deduped = (
@@ -220,13 +203,12 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["user_id", "event_type"]
         )
     )
-    run_bounded_replay(
-        spark, deduped, checkpoint=os.path.join(work, "ckpt"),
-        name=name, output_mode="append",
-    )
-    result = spark.table(name).select("user_id", "event_type")
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+    with tempfile.TemporaryDirectory(prefix="dedup_replay_ckpt_") as work:
+        run_bounded_replay(
+            spark, deduped, checkpoint=os.path.join(work, "ckpt"),
+            name=name, output_mode="append",
+        )
+    return spark.table(name).select("user_id", "event_type")
 
 
 #: output / state schemas for the custom stateful operator
@@ -276,19 +258,18 @@ def streaming_user_state_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # Shares the 8-file landing with the other replays; the query still
     # runs as ONE batch because no maxFilesPerTrigger is set below.
-    work, src, schema = _events_replay(spark, sf_dir)
+    src, schema = land_events_replay(spark, sf_dir)
     name = "user_state_contract"
     stream = file_stream(spark, src, schema, max_files_per_trigger=None)
     out = user_running_state(stream)
-    run_bounded_replay(
-        spark, out, checkpoint=os.path.join(work, "ckpt"),
-        name=name, output_mode="update",
-    )
-    result = spark.table(name).select(
+    with tempfile.TemporaryDirectory(prefix="user_state_replay_ckpt_") as work:
+        run_bounded_replay(
+            spark, out, checkpoint=os.path.join(work, "ckpt"),
+            name=name, output_mode="update",
+        )
+    return spark.table(name).select(
         "user_id", "n_events", F.round("sum_value", 2).alias("sum_value")
     )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 def streaming_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -320,69 +301,68 @@ def streaming_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below would mutate the shared landing other replays order by). The
     # checkpoint/work dir stays private per run.
     shared_src, schema = land_events_replay(spark, sf_dir, n_files)
-    work = tempfile.mkdtemp(prefix="session_replay_")
-    land = os.path.join(work, "src")
-    os.makedirs(land)
-    import time as _time
+    with tempfile.TemporaryDirectory(prefix="session_replay_") as work:
+        land = os.path.join(work, "src")
+        os.makedirs(land)
+        import time as _time
 
-    now = _time.time()
-    for f in os.listdir(shared_src):
-        if f.endswith(".parquet"):
-            dst = os.path.join(land, f)
-            shutil.copy(os.path.join(shared_src, f), dst)
-            os.utime(dst, (now, now))
+        now = _time.time()
+        for f in os.listdir(shared_src):
+            if f.endswith(".parquet"):
+                dst = os.path.join(land, f)
+                shutil.copy(os.path.join(shared_src, f), dst)
+                os.utime(dst, (now, now))
 
-    max_ts = (
-        spark.read.schema(schema)
-        .parquet(land)
-        .agg(F.max("ts"))
-        .collect()[0][0]
-    )
-    import datetime
-
-    before = {f for f in os.listdir(land) if f.endswith(".parquet")}
-    sentinel_ts = max_ts + datetime.timedelta(hours=5)  # > gap 4 h + delay
-    # Built JVM-side from a 1-partition range: createDataFrame(python rows)
-    # plans a 32-partition Python local relation whose coalesce costs ~3 s
-    # of serial Python-worker spinup for ONE row.
-    sentinel = spark.range(0, 1, 1, 1).select(
-        F.lit(-1).cast("long").alias("event_id"),
-        F.lit(sentinel_ts).alias("ts"),
-        F.lit(-1).cast("long").alias("user_id"),
-        F.lit("sentinel").alias("event_type"),
-        F.lit(0.0).alias("value"),
-        F.lit(None).cast("string").alias("props"),
-    )
-    sentinel.write.mode("append").parquet(land)
-    # mtime decides micro-batch order in the file source: push ONLY the
-    # sentinel's part file strictly after the landing's
-    later = _time.time() + 60
-    for f in os.listdir(land):
-        if f.endswith(".parquet") and f not in before:
-            os.utime(os.path.join(land, f), (later, later))
-
-    name = "session_replay_contract"
-    stream = file_stream(spark, land, schema, max_files_per_trigger=n_files)
-    sess = (
-        stream.withWatermark("ts", "1 minute")
-        .groupBy(F.session_window("ts", SESSION_GAP), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("session_value"),
+        max_ts = (
+            spark.read.schema(schema)
+            .parquet(land)
+            .agg(F.max("ts"))
+            .collect()[0][0]
         )
-    )
-    run_bounded_replay(
-        spark, sess, checkpoint=os.path.join(work, "ckpt"),
-        name=name, output_mode="append",
-    )
-    result = spark.table(name).filter(F.col("user_id") >= 0).select(
-        "user_id",
-        F.date_format("session_window.start", TS_FMT).alias("session_start"),
-        F.date_format("session_window.end", TS_FMT).alias("session_end"),
-        "n_events",
-        "session_value",
-    )
-    shutil.rmtree(work, ignore_errors=True)
+        import datetime
+
+        before = {f for f in os.listdir(land) if f.endswith(".parquet")}
+        sentinel_ts = max_ts + datetime.timedelta(hours=5)  # > gap 4 h + delay
+        # Built JVM-side from a 1-partition range: createDataFrame(python rows)
+        # plans a 32-partition Python local relation whose coalesce costs ~3 s
+        # of serial Python-worker spinup for ONE row.
+        sentinel = spark.range(0, 1, 1, 1).select(
+            F.lit(-1).cast("long").alias("event_id"),
+            F.lit(sentinel_ts).alias("ts"),
+            F.lit(-1).cast("long").alias("user_id"),
+            F.lit("sentinel").alias("event_type"),
+            F.lit(0.0).alias("value"),
+            F.lit(None).cast("string").alias("props"),
+        )
+        sentinel.write.mode("append").parquet(land)
+        # mtime decides micro-batch order in the file source: push ONLY the
+        # sentinel's part file strictly after the landing's
+        later = _time.time() + 60
+        for f in os.listdir(land):
+            if f.endswith(".parquet") and f not in before:
+                os.utime(os.path.join(land, f), (later, later))
+
+        name = "session_replay_contract"
+        stream = file_stream(spark, land, schema, max_files_per_trigger=n_files)
+        sess = (
+            stream.withWatermark("ts", "1 minute")
+            .groupBy(F.session_window("ts", SESSION_GAP), "user_id")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.round(F.sum("value"), 2).alias("session_value"),
+            )
+        )
+        run_bounded_replay(
+            spark, sess, checkpoint=os.path.join(work, "ckpt"),
+            name=name, output_mode="append",
+        )
+        result = spark.table(name).filter(F.col("user_id") >= 0).select(
+            "user_id",
+            F.date_format("session_window.start", TS_FMT).alias("session_start"),
+            F.date_format("session_window.end", TS_FMT).alias("session_end"),
+            "n_events",
+            "session_value",
+        )
     return result
 
 
@@ -434,33 +414,32 @@ def streaming_neardup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     old_bands, old_sets = memo(spark, "neardup_index", sf_dir, _build)
 
-    work = tempfile.mkdtemp(prefix="neardup_replay_")
-    src = os.path.join(work, "src")
-    out = os.path.join(work, "out")
-    new_docs = docs.filter(is_new).select("doc_id", "text")
-    new_docs.repartition(4).write.mode("overwrite").parquet(src)
-    src_schema = new_docs.schema
+    with tempfile.TemporaryDirectory(prefix="neardup_replay_") as work:
+        src = os.path.join(work, "src")
+        out = os.path.join(work, "out")
+        new_docs = docs.filter(is_new).select("doc_id", "text")
+        new_docs.repartition(4).write.mode("overwrite").parquet(src)
+        src_schema = new_docs.schema
 
-    def probe(batch_df: DataFrame, batch_id: int) -> None:
-        # the SAME primitive as the batch operator — probe_index is shared
-        # so the verify math can never drift between batch and streaming
-        verified = probe_index(
-            _with_hashed_shingles(batch_df), old_bands, old_sets
+        def probe(batch_df: DataFrame, batch_id: int) -> None:
+            # the SAME primitive as the batch operator — probe_index is shared
+            # so the verify math can never drift between batch and streaming
+            verified = probe_index(
+                _with_hashed_shingles(batch_df), old_bands, old_sets
+            )
+            verified.write.mode("append").parquet(out)
+
+        name = "neardup_contract"
+        # 2 files/trigger over the 4-file landing = 2 micro-batches: still a
+        # genuine multi-batch probe (the contract under test) at half the
+        # per-batch job overhead of one-file triggers
+        stream = file_stream(spark, src, src_schema, max_files_per_trigger=2)
+        run_bounded_replay(
+            spark, stream, checkpoint=os.path.join(work, "ckpt"),
+            name=name, foreach_batch=probe,
         )
-        verified.write.mode("append").parquet(out)
-
-    name = "neardup_contract"
-    # 2 files/trigger over the 4-file landing = 2 micro-batches: still a
-    # genuine multi-batch probe (the contract under test) at half the
-    # per-batch job overhead of one-file triggers
-    stream = file_stream(spark, src, src_schema, max_files_per_trigger=2)
-    run_bounded_replay(
-        spark, stream, checkpoint=os.path.join(work, "ckpt"),
-        name=name, foreach_batch=probe,
-    )
-    # detach from the temp dir before cleanup
-    result = spark.read.parquet(out).localCheckpoint()
-    shutil.rmtree(work, ignore_errors=True)
+        # detach from the temp dir before cleanup
+        result = spark.read.parquet(out).localCheckpoint()
     return result
 
 
@@ -507,32 +486,31 @@ def streaming_winnow_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     old_rare, old_counts, fp_domain = memo(spark, "winnow_index", sf_dir, _build)
 
-    work = tempfile.mkdtemp(prefix="winnow_replay_")
-    src = os.path.join(work, "src")
-    out = os.path.join(work, "out")
-    new_docs = docs.filter(is_new).select("doc_id", "text")
-    new_docs.repartition(4).write.mode("overwrite").parquet(src)
-    src_schema = new_docs.schema
+    with tempfile.TemporaryDirectory(prefix="winnow_replay_") as work:
+        src = os.path.join(work, "src")
+        out = os.path.join(work, "out")
+        new_docs = docs.filter(is_new).select("doc_id", "text")
+        new_docs.repartition(4).write.mode("overwrite").parquet(src)
+        src_schema = new_docs.schema
 
-    def probe(batch_df: DataFrame, batch_id: int) -> None:
-        # fingerprint the arriving text live (shared selection primitive),
-        # keep only census-domain fps, probe with the shared primitive —
-        # each doc's text arrives whole, so its pair rows are complete
-        # within its own micro-batch and the union over batches ≡ batch
-        sel = winnow_selected(batch_df)
-        batch_rare = fp_domain.join(F.broadcast(sel), "fp").select(
-            "doc_id", "fp"
+        def probe(batch_df: DataFrame, batch_id: int) -> None:
+            # fingerprint the arriving text live (shared selection primitive),
+            # keep only census-domain fps, probe with the shared primitive —
+            # each doc's text arrives whole, so its pair rows are complete
+            # within its own micro-batch and the union over batches ≡ batch
+            sel = winnow_selected(batch_df)
+            batch_rare = fp_domain.join(F.broadcast(sel), "fp").select(
+                "doc_id", "fp"
+            )
+            verified = winnow_probe_index(batch_rare, old_rare, old_counts)
+            verified.write.mode("append").parquet(out)
+
+        stream = file_stream(spark, src, src_schema, max_files_per_trigger=2)
+        run_bounded_replay(
+            spark, stream, checkpoint=os.path.join(work, "ckpt"),
+            name="winnow_contract", foreach_batch=probe,
         )
-        verified = winnow_probe_index(batch_rare, old_rare, old_counts)
-        verified.write.mode("append").parquet(out)
-
-    stream = file_stream(spark, src, src_schema, max_files_per_trigger=2)
-    run_bounded_replay(
-        spark, stream, checkpoint=os.path.join(work, "ckpt"),
-        name="winnow_contract", foreach_batch=probe,
-    )
-    result = spark.read.parquet(out).localCheckpoint()
-    shutil.rmtree(work, ignore_errors=True)
+        result = spark.read.parquet(out).localCheckpoint()
     return result
 
 
@@ -605,24 +583,23 @@ def streaming_distinct_state_replay(spark: SparkSession, sf_dir: str) -> DataFra
     """Driver contract: transformWithState distinct-type tracker over a
     4-micro-batch replay; final per-user emission ≡ batch
     ``count(DISTINCT event_type)``."""
-    work, src, schema = _events_replay(spark, sf_dir)
+    src, schema = land_events_replay(spark, sf_dir)
     name = "tws_contract"
     stream = file_stream(spark, src, schema, max_files_per_trigger=2)
     counted = user_distinct_types(stream)
-    run_bounded_replay(
-        spark, counted, checkpoint=os.path.join(work, "ckpt"),
-        name=name, output_mode="update",
-    )
+    with tempfile.TemporaryDirectory(prefix="distinct_state_replay_ckpt_") as work:
+        run_bounded_replay(
+            spark, counted, checkpoint=os.path.join(work, "ckpt"),
+            name=name, output_mode="update",
+        )
     # update-mode memory sink appends one row per (user, batch-appeared);
     # the running count is monotone, so MAX = the final state
-    result = (
+    return (
         spark.table(name)
         .groupBy("user_id")
         .agg(F.max("n_event_types").alias("n_event_types"))
         .localCheckpoint()
     )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 def streaming_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -642,7 +619,7 @@ def streaming_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from kafka_exercise_spark.catalog import load_table  # noqa: PLC0415
 
-    work, src, schema = _events_replay(spark, sf_dir)
+    src, schema = land_events_replay(spark, sf_dir)
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
@@ -658,10 +635,9 @@ def streaming_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("total_value"),
         )
     )
-    run_bounded_replay(
-        spark, agg, checkpoint=os.path.join(work, "ckpt"),
-        name=name, output_mode="complete",
-    )
-    result = spark.table(name).localCheckpoint()
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+    with tempfile.TemporaryDirectory(prefix="enrich_replay_ckpt_") as work:
+        run_bounded_replay(
+            spark, agg, checkpoint=os.path.join(work, "ckpt"),
+            name=name, output_mode="complete",
+        )
+    return spark.table(name).localCheckpoint()

@@ -203,3 +203,61 @@ def test_jdbc_reader_roundtrip_embedded_derby(spark, tmp_path):
     assert "GreaterThan(dt_update" in plan, plan
     got = sorted(r.id for r in delta.collect())
     assert got == [5, 6, 7]
+
+
+@pytest.mark.parametrize("zone", ["America/Sao_Paulo", "Asia/Tokyo"])
+def test_hwm_exactly_once_whatever_the_host_zone(spark, tmp_path, zone):
+    """The persisted high-water mark must not depend on the host's time
+    zone. ``collect()`` hands timestamps to Python in the HOST's local
+    zone while ``poll_once`` reads the mark back in the session zone
+    (UTC): a mark stored as local wall-clock time re-emits rows on a
+    host west of UTC and loses them for good east of it. Both the
+    ``run`` loop and the manual ``poll_once``/``commit`` loop must
+    capture every row exactly once."""
+    import time
+
+    from kafka_exercise_spark.sources.incremental import (
+        TimestampModeSource,
+        parquet_dir_reader,
+    )
+
+    src_dir = str(tmp_path / "rows")
+
+    def land(i: int, ts: str) -> None:
+        spark.createDataFrame([(i, ts)], "id bigint, dt_update string").select(
+            "id", F.col("dt_update").cast("timestamp").alias("dt_update")
+        ).write.mode("append").parquet(src_dir)
+
+    captured: list[int] = []
+
+    def sink(df, _batch_id):
+        captured.extend(r.id for r in df.collect())
+
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = zone
+    time.tzset()
+    try:
+        source = TimestampModeSource(
+            spark,
+            reader=parquet_dir_reader(src_dir),
+            cursor_col="dt_update",
+            state_path=str(tmp_path / "state.json"),
+        )
+        land(1, "2024-01-01 10:00:00")
+        source.run(sink, polls=1)
+        land(2, "2024-01-01 11:00:00")
+        source.run(sink, polls=1)
+        # manual loop: commit() gets the collected (host-local) datetime
+        land(3, "2024-01-01 12:00:00")
+        batch = source.poll_once()
+        sink(batch, 2)
+        source.commit(batch.agg(F.max("dt_update")).collect()[0][0])
+        land(4, "2024-01-01 13:00:00")
+        sink(source.poll_once(), 3)
+    finally:
+        if saved is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+    assert captured == [1, 2, 3, 4]

@@ -238,6 +238,42 @@ def test_dedup_components_invariants(spark, sf_dir):
         assert all(m["comp_size"] == len(members) for m in members)
 
 
+def test_multi_pass_contraction_equals_single_pass(spark, sf_dir, monkeypatch):
+    """The Borůvka multi-pass loop of ``_components_from_pairs`` (per-
+    partition forests, repartitioned down, until one task finishes) must
+    label every node exactly as the single-task finish does. No fixture
+    graph is big enough to enter the loop, so the task threshold is
+    forced to 1 over 8 partitions of the LSH pairs plus chains whose
+    edges scatter across partitions."""
+    lsh = dedup.dedup_minhash_lsh(spark, sf_dir).select("id_a", "id_b")
+    chains = spark.range(200).select(
+        (F.lit(10**9) + F.col("id")).alias("id_a"),
+        # 4 chains of 50 nodes: i—i+1 unless i+1 starts the next chain
+        F.when(
+            F.pmod(F.col("id") + 1, 50) != 0,
+            F.lit(10**9) + F.col("id") + 1,
+        )
+        .otherwise(F.lit(10**9) + F.col("id"))
+        .alias("id_b"),
+    )
+    pairs = lsh.union(chains)
+
+    def labels():
+        return {
+            tuple(r)
+            for r in dedup._components_from_pairs(
+                spark, pairs.repartition(8), id_name="doc_id"
+            ).collect()
+        }
+
+    single = labels()
+    monkeypatch.setattr(dedup, "CC_SINGLE_TASK_EDGES", 1)
+    multi = labels()
+    assert multi == single
+    sizes = {r[2] for r in single if r[0] >= 10**9}
+    assert sizes == {50}
+
+
 def test_corpus_ngram_counts_topk(spark, sf_dir):
     rows = textops.corpus_ngram_counts(spark, sf_dir).collect()
     assert 0 < len(rows) <= textops.TOP_NGRAMS

@@ -481,8 +481,9 @@ def test_knn_vote_broadcasts_queries_single_shuffle(spark, sf_dir):
 
 
 def test_log_compaction_single_key_shuffle(spark, sf_dir):
-    """Compaction = ONE shuffle on the key: the per-key count window
-    rides the ranked window's exchange (no groupBy + join-back)."""
+    """Compaction = ONE shuffle on the key: the latest record and the
+    per-key count come out of one map-side-combined aggregate (no second
+    exchange, no join-back)."""
     from kafka_exercise_spark.operators import merge as m
 
     df = m.log_compaction(spark, sf_dir)

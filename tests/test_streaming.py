@@ -371,3 +371,19 @@ def test_streaming_soft_draw_replay_equals_batch_draw(spark, sf_dir):
     assert {s: (r.n_docs, r.n_kept) for s, r in again.items()} == {
         s: (r.n_docs, r.n_kept) for s, r in got.items()
     }
+
+
+def test_streaming_compaction_replay_equals_batch_compaction(spark, sf_dir):
+    """The state-store fold of the changelog must equal the one-shot batch
+    log compaction row-for-row, schema included."""
+    from kafka_exercise_spark.operators.merge import log_compaction
+    from kafka_exercise_spark.streaming.pipeline import (
+        streaming_compaction_replay,
+    )
+
+    streamed = streaming_compaction_replay(spark, sf_dir)
+    batch = log_compaction(spark, sf_dir)
+    assert streamed.schema == batch.schema
+    got = {tuple(r) for r in streamed.collect()}
+    want = {tuple(r) for r in batch.collect()}
+    assert got == want and len(want) > 0

@@ -7,6 +7,7 @@ import os
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_exercise_spark.catalog import load_table
@@ -214,3 +215,22 @@ def test_streaming_enrich_equals_batch_join(spark, sf_dir):
         .collect()
     }
     assert streamed == batch
+
+
+def test_failed_replay_leaves_no_work_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """A replay that fails — here a bounded wait that times out — must
+    still remove its checkpoint dir, not leave it behind under the temp
+    root."""
+    from kafka_exercise_spark.streaming.sources import land_events_replay
+
+    land_events_replay(spark, sf_dir)  # the memo-owned landing lives elsewhere
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def timed_out(query, *, name=None, timeout_s=0):
+        query.stop()
+        raise TimeoutError(f"bounded replay {name} still running")
+
+    monkeypatch.setattr(stateful, "await_bounded", timed_out)
+    with pytest.raises(TimeoutError):
+        stateful.streaming_dedup_replay(spark, sf_dir)
+    assert not list(tmp_path.glob("*_ckpt_*"))

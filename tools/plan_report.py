@@ -90,7 +90,7 @@ SELECTED = [
     ("knn_label_vote", "query side broadcast; vote tail is nq x k rows"),
     ("ann_filtered_topk", "one scored pass; filtered + global ranks share one exchange"),
     ("quality_ablation_report", "6-rule explode over the map-only battery; one agg"),
-    ("log_compaction", "ONE key shuffle shared by rank + count windows"),
+    ("log_compaction", "ONE key shuffle: latest record + count in one aggregate"),
     ("dedup_detector_matrix", "union of memoized pair frames + 2 tiny groupBys"),
     ("text_novelty_score", "shared shingle frame; df census + per-doc rollup"),
     ("curriculum_plan", "fixed micro-nat bands map-side; window over the band frame"),
